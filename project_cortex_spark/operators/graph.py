@@ -22,6 +22,8 @@ the broadcast plan is strictly better.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -31,6 +33,18 @@ DEFAULT_DEPTH = 3
 
 def _clamp_depth(depth: int) -> int:
     return max(1, min(depth, MAX_DEPTH))
+
+
+def _union_all(parts: list) -> DataFrame:
+    """Left-deep unionByName of a non-empty list of frames."""
+    return functools.reduce(lambda x, y: x.unionByName(y), parts)
+
+
+def _undirected(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
+    """Both directions of an undirected edge list as ``(src, dst)``."""
+    return edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).union(
+        edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
+    )
 
 
 def bfs(
@@ -58,7 +72,11 @@ def bfs(
         # a min-depth aggregate) instead of one driver-synchronized job
         # per level — the per-level isEmpty/checkpoint round-trips cost
         # more than the wasted work of skipping early exit at this depth
-        return _bfs_fused(edges, start, depth=depth, src=src, dst=dst)
+        return _bfs_unrolled(
+            edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")),
+            spark.createDataFrame([(s,) for s in start], ["node"]),
+            depth,
+        )
     # the frontier is tiny (bounded by branching factor); broadcasting it
     # means the edge frame is NEVER shuffled — each level is a map-side
     # hash join over the in-place edges
@@ -93,36 +111,33 @@ def bfs(
     return out.orderBy("depth", "node")
 
 
-def _bfs_fused(
-    edges: DataFrame, start: list, *, depth: int, src: str, dst: str
-) -> DataFrame:
-    """Depth-unrolled BFS as one declarative plan: level k = distinct
-    successors of level k-1 (broadcast frontier, edges stationary), all
-    levels unioned, min(depth) per node, start nodes anti-joined out.
-    Identical output to the loop form — a node revisited on a longer
-    path or via a cycle is collapsed by the min-depth aggregate instead
-    of the per-level visited set. No driver actions, so Spark schedules
-    the whole traversal as one job."""
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    start_df = spark.createDataFrame([(s,) for s in start], ["node"])
+def _bfs_unrolled(e: DataFrame, start_df: DataFrame, depth: int) -> DataFrame:
+    """Depth-unrolled BFS as one declarative plan over the prepared
+    ``(_src, _dst)`` frame: level k = distinct successors of level k-1
+    (broadcast frontier, edges stationary), all levels unioned, min(depth)
+    per key, start rows anti-joined out. ``start_df`` is ``(node)`` for
+    one traversal or ``(root, node)`` for a batch; every column but
+    ``node`` rides along as part of the key. Identical output to the loop
+    form — a node revisited on a longer path or via a cycle is collapsed
+    by the min-depth aggregate instead of the per-level visited set. No
+    driver actions, so Spark schedules the whole traversal as one job."""
+    carry = [c for c in start_df.columns if c != "node"]
+    keys = carry + ["node"]
     frontier = start_df
     levels = []
     for level in range(1, depth + 1):
         frontier = (
             e.join(F.broadcast(frontier), frontier["node"] == e["_src"])
-            .select(F.col("_dst").alias("node"))
+            .select(*carry, F.col("_dst").alias("node"))
             .distinct()
         )
         levels.append(frontier.withColumn("depth", F.lit(level)))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
     return (
-        out.groupBy("node")
+        _union_all(levels)
+        .groupBy(*keys)
         .agg(F.min("depth").alias("depth"))
-        .join(F.broadcast(start_df), "node", "left_anti")
-        .orderBy("depth", "node")
+        .join(F.broadcast(start_df), keys, "left_anti")
+        .orderBy(*carry, "depth", "node")
     )
 
 
@@ -169,24 +184,8 @@ def bfs_multi(
         return spark.createDataFrame(
             [], f"root {node_dt}, node {node_dt}, depth int"
         )
-    start_df = spark.createDataFrame([(s, s) for s in starts], ["root", "node"])
-    frontier = start_df
-    levels = []
-    for level in range(1, depth + 1):
-        frontier = (
-            e.join(F.broadcast(frontier), frontier["node"] == e["_src"])
-            .select("root", F.col("_dst").alias("node"))
-            .distinct()
-        )
-        levels.append(frontier.withColumn("depth", F.lit(level)))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return (
-        out.groupBy("root", "node")
-        .agg(F.min("depth").alias("depth"))
-        .join(F.broadcast(start_df), ["root", "node"], "left_anti")
-        .orderBy("root", "depth", "node")
+    return _bfs_unrolled(
+        e, spark.createDataFrame([(s, s) for s in starts], ["root", "node"]), depth
     )
 
 
@@ -673,6 +672,61 @@ def triangles_per_node(edges: DataFrame) -> DataFrame:
 BROADCAST_NODE_LIMIT = 50_000_000
 
 
+def _fits_broadcast(n_rows: int) -> bool:
+    """The broadcast-vs-shuffle switch of every iterative operator: True
+    while a node-keyed frame of ``n_rows`` rows stays under
+    :data:`BROADCAST_NODE_LIMIT`. The only reader of the limit, so tests
+    and the A/B script flip every operator's arm by patching the module
+    constant."""
+    return n_rows <= BROADCAST_NODE_LIMIT
+
+
+def _hint(small: bool):
+    """Join-side wrapper for the arm :func:`_fits_broadcast` picked: an
+    explicit broadcast hint, or none (a shuffle join)."""
+    return F.broadcast if small else (lambda df: df)
+
+
+def _node_degrees(edges: DataFrame, name: str) -> DataFrame:
+    """(node, ``name``) endpoint counts of an undirected a<b edge list."""
+    return (
+        edges.select(F.col("a").alias("node"))
+        .union(edges.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias(name))
+    )
+
+
+def _rank_step(edges: DataFrame, a: str, b: str, broadcast_ranks: bool | None):
+    """Shared edge preparation of :func:`pagerank` and
+    :func:`pagerank_personalized`: the cached undirected view, its node
+    frame and count, and the contribution step ``ranks -> (node, _in)``
+    with _in = Σ_{u~v} pr(u)/deg(u). ``broadcast_ranks=None`` takes the
+    size switch; on the shuffle arm the stationary edge list is
+    hash-partitioned on src ONCE (the partitioning survives the
+    localCheckpoint) so each step exchanges only the |V|-row rank frame."""
+    dir_edges = _undirected(edges, a, b).cache()
+    deg = dir_edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    nodes = deg.select(F.col("src").alias("node")).cache()
+    n = nodes.count()  # driver scalar: node count (one small aggregate)
+    if broadcast_ranks is None:
+        broadcast_ranks = _fits_broadcast(n)
+    bcast = _hint(broadcast_ranks)
+    out_edges = dir_edges.join(deg, "src").select("src", "dst", "deg")
+    if not broadcast_ranks:
+        out_edges = out_edges.repartition("src")
+    out_edges = out_edges.localCheckpoint(eager=False)
+
+    def contrib(ranks: DataFrame) -> DataFrame:
+        return (
+            out_edges.join(bcast(ranks.withColumnRenamed("node", "src")), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.col("pr") / F.col("deg")).alias("_in"))
+        )
+
+    return nodes, n, contrib
+
+
 def pagerank(
     edges: DataFrame,
     *,
@@ -700,46 +754,25 @@ def pagerank(
     (id, double)) gets an explicit broadcast hint — the classic
     small-ranks/big-edges shape, so the edge list NEVER shuffles and
     each step costs one broadcast + one partial-aggregated exchange of
-    |V| rows. When |V| outgrows broadcast range (``broadcast_ranks``,
-    auto-switched at BROADCAST_NODE_LIMIT using the node count the
-    algorithm already takes), the fallback hash-partitions the
-    stationary edge list on src ONCE (the partitioning survives the
-    localCheckpoint) so each step's shuffle join exchanges only the
-    |V|-row rank frame — A/B-measured at sf1 in
+    |V| rows. When |V| outgrows broadcast range (auto-switched at
+    BROADCAST_NODE_LIMIT using the node count the algorithm already
+    takes; ``broadcast_ranks`` forces either arm), the fallback
+    hash-partitions the stationary edge list on src ONCE (the
+    partitioning survives the localCheckpoint) so each step's shuffle
+    join exchanges only the |V|-row rank frame — A/B-measured at sf1 in
     scripts/ab_graph_broadcast.py / SCALE.md. Skew = hub in-degree,
     which a degree-capped edge list (cooccurrence_edges max_df) already
     bounds; on a raw power-law graph the aggregate's map-side partials
     absorb the hot key.
     """
-    dir_edges = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .cache()
-    )
-    deg = dir_edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = deg.select(F.col("src").alias("node")).cache()
-    n = nodes.count()  # driver scalar: node count (one small aggregate)
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= BROADCAST_NODE_LIMIT
+    nodes, n, contrib = _rank_step(edges, a, b, broadcast_ranks)
     ranks = nodes.select("node", F.lit(1.0 / n).alias("pr"))
-    out_edges = dir_edges.join(deg, "src").select("src", "dst", "deg")
-    if not broadcast_ranks:
-        out_edges = out_edges.repartition("src")
-    out_edges = out_edges.localCheckpoint(eager=False)
     base = (1.0 - damping) / n
     for _ in range(iters):
-        rside = ranks.withColumnRenamed("node", "src")
-        contrib = (
-            out_edges.join(
-                F.broadcast(rside) if broadcast_ranks else rside, "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("deg")).alias("_in"))
-        )
         # undirected contract: every node has deg >= 1, so every node
         # receives at least one contribution — contrib's key set IS the
         # node set and no backfill join against `nodes` is needed
-        ranks = contrib.select(
+        ranks = contrib(ranks).select(
             "node",
             (F.lit(base) + F.lit(damping) * F.col("_in")).alias("pr"),
         ).localCheckpoint(eager=False)
@@ -755,7 +788,6 @@ def pagerank_personalized(
     a: str = "a",
     b: str = "b",
     seed_col: str = "node",
-    broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Personalized PageRank: :func:`pagerank` with the uniform
     teleport replaced by a distribution concentrated on ``seeds`` —
@@ -772,14 +804,7 @@ def pagerank_personalized(
     step — at 100 TB that join rides the aggregate's own partitioning.
     The oracle unrolls the identical CTE chain with a CASE teleport.
     """
-    dir_edges = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .cache()
-    )
-    deg = dir_edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = deg.select(F.col("src").alias("node")).cache()
-    n = nodes.count()
+    nodes, _n, contrib = _rank_step(edges, a, b, None)
     seed_nodes = nodes.join(
         seeds.select(F.col(seed_col).alias("node")).distinct(),
         "node",
@@ -788,8 +813,6 @@ def pagerank_personalized(
     ns = seed_nodes.count()
     if ns == 0:
         raise ValueError("pagerank_personalized: no seed is a graph node")
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= BROADCAST_NODE_LIMIT
     tele = (
         nodes.join(
             seed_nodes.withColumn("_s", F.lit(1)), "node", "left"
@@ -803,21 +826,9 @@ def pagerank_personalized(
         .localCheckpoint(eager=True)
     )
     ranks = tele.select("node", F.col("tele").alias("pr"))
-    out_edges = dir_edges.join(deg, "src").select("src", "dst", "deg")
-    if not broadcast_ranks:
-        out_edges = out_edges.repartition("src")
-    out_edges = out_edges.localCheckpoint(eager=False)
     for _ in range(iters):
-        rside = ranks.withColumnRenamed("node", "src")
-        contrib = (
-            out_edges.join(
-                F.broadcast(rside) if broadcast_ranks else rside, "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("deg")).alias("_in"))
-        )
         ranks = (
-            tele.join(contrib, "node", "left")
+            tele.join(contrib(ranks), "node", "left")
             .select(
                 "node",
                 (
@@ -835,7 +846,6 @@ def kcore(
     *,
     k: int = 3,
     rounds: int = 8,
-    broadcast_keep: bool | None = None,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling over an undirected a<b
     edge list: drop every node with degree < k, recompute degrees over
@@ -861,8 +871,7 @@ def kcore(
     two semi joins against the (shrinking) keep set — the keep frame is
     node-sized and broadcastable; `localCheckpoint(eager=False)`
     truncates the 3-ops-per-round lineage like the PageRank loop.
-    Past BROADCAST_NODE_LIMIT nodes (``broadcast_keep``, auto-switched
-    with one upfront distinct-count) the semi joins run as shuffle
+    Past BROADCAST_NODE_LIMIT nodes the semi joins run as shuffle
     joins — the edge list cannot be pre-partitioned for BOTH endpoint
     keys, so the fallback honestly pays two exchanges per round
     (A/B at sf1: scripts/ab_graph_broadcast.py, SCALE.md).
@@ -872,14 +881,10 @@ def kcore(
     # pipeline (for cooccurrence_edges: several shuffles) from scratch
     surv = edges.select("a", "b").cache()
     prev_keep = None
+    bcast = None
     for _ in range(rounds):
-        deg = (
-            surv.select(F.col("a").alias("node"))
-            .union(surv.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        if broadcast_keep is None:
+        deg = _node_degrees(surv, "deg")
+        if bcast is None:
             # the broadcast-vs-shuffle switch needs |V| of the ORIGINAL
             # graph — which is exactly round 1's degree frame's row
             # count. Checkpoint it and count THAT instead of running a
@@ -887,7 +892,7 @@ def kcore(
             # whole pass; interleaved A/B min 3.36 -> 2.46 s through
             # the gated query).
             deg = deg.localCheckpoint(eager=True)
-            broadcast_keep = deg.count() <= BROADCAST_NODE_LIMIT
+            bcast = _hint(_fits_broadcast(deg.count()))
         # eager node-sized checkpoint: the probe count below and the two
         # semi-join arms all reuse the materialized keep frame instead
         # of recomputing the degree aggregate
@@ -899,20 +904,13 @@ def kcore(
         if n_keep == prev_keep:
             break  # keep sets only shrink: equal count == fixpoint
         prev_keep = n_keep
-        ka = keep.withColumnRenamed("node", "a")
-        kb = keep.withColumnRenamed("node", "b")
         surv = (
-            surv.join(F.broadcast(ka) if broadcast_keep else ka, "a", "left_semi")
-            .join(F.broadcast(kb) if broadcast_keep else kb, "b", "left_semi")
+            surv.join(bcast(keep.withColumnRenamed("node", "a")), "a", "left_semi")
+            .join(bcast(keep.withColumnRenamed("node", "b")), "b", "left_semi")
             .select("a", "b")
             .localCheckpoint(eager=False)
         )
-    return (
-        surv.select(F.col("a").alias("node"))
-        .union(surv.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_deg"))
-    )
+    return _node_degrees(surv, "core_deg")
 
 
 def degree_distribution(edges: DataFrame) -> DataFrame:
@@ -922,12 +920,7 @@ def degree_distribution(edges: DataFrame) -> DataFrame:
     hash aggregates: level 1 shuffles 2|E| endpoint rows with map-side
     partials; level 2's input is |V| rows keyed on the tiny set of
     distinct degrees."""
-    deg = (
-        edges.select(F.col("a").alias("node"))
-        .union(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    deg = _node_degrees(edges, "degree")
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
@@ -994,7 +987,6 @@ def communities_lpa(
     min_size: int = 2,
     a: str = "a",
     b: str = "b",
-    broadcast_labels: bool | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) over an undirected edge list: every node starts as its
@@ -1020,29 +1012,23 @@ def communities_lpa(
     lineage cut per round with localCheckpoint. The argmax window
     partitions on high-cardinality node ids, so no skew; hub fan-in is
     bounded upstream by cooccurrence_edges' max_df cap. Past
-    BROADCAST_NODE_LIMIT nodes (``broadcast_labels``, auto-switched
-    with one upfront distinct-count) the fallback
-    hash-partitions the stationary edges on src once, same as
-    :func:`pagerank` (A/B at sf1: scripts/ab_graph_broadcast.py,
+    BROADCAST_NODE_LIMIT nodes (auto-switched with one upfront
+    distinct-count) the label frame joins without a broadcast hint and
+    the fallback hash-partitions the stationary edges on src once, same
+    as :func:`pagerank` (A/B at sf1: scripts/ab_graph_broadcast.py,
     SCALE.md).
     """
-    dir_edges = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-    )
-    # ONE distinct-nodes pass serves both the broadcast switch and the
-    # label init (r10, guide §1.2): previously the switch ran its own
-    # distinct+count over the full upstream edge derivation and the
-    # init frame re-ran the identical distinct — two whole passes of an
-    # uncached pipeline for one |V|-row frame.
+    dir_edges = _undirected(edges, a, b)
+    # one checkpointed distinct-nodes frame serves both the broadcast
+    # switch and the label init
     nodes = (
         dir_edges.select(F.col("src").alias("node"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if broadcast_labels is None:
-        broadcast_labels = nodes.count() <= BROADCAST_NODE_LIMIT
-    if not broadcast_labels:
+    small = _fits_broadcast(nodes.count())
+    bcast = _hint(small)
+    if not small:
         dir_edges = dir_edges.repartition("src")
     dir_edges = dir_edges.localCheckpoint(eager=False)
     labels = nodes.select("node", F.col("node").alias("label"))
@@ -1056,9 +1042,7 @@ def communities_lpa(
     )
     for _ in range(rounds):
         labels = (
-            dir_edges.join(
-                F.broadcast(labels.withColumnRenamed("node", "src")), "src"
-            )
+            dir_edges.join(bcast(labels.withColumnRenamed("node", "src")), "src")
             .groupBy(F.col("dst").alias("node"), "label")
             .agg(F.count(F.lit(1)).alias("c"))
             .withColumn("rk", F.row_number().over(win))
@@ -1109,11 +1093,11 @@ def connected_components(
     per round; a 2^-64 collision is far below this host's soft-error
     rate and the cap below would still bound the loop).
     """
-    p = (
-        pairs.select(F.col(a).alias("x"), F.col(b).alias("y"))
-        .filter(F.col("x") != F.col("y"))
-        .localCheckpoint(eager=True)
+    p = pairs.select(F.col(a).alias("x"), F.col(b).alias("y")).localCheckpoint(
+        eager=True
     )
+    # the node set comes from every pair, self-pairs included: a node
+    # whose only pair is (v, v) is its own singleton cluster
     nodes = (
         p.select(F.col("x").alias("node"))
         .unionByName(p.select(F.col("y").alias("node")))
@@ -1122,9 +1106,8 @@ def connected_components(
     )
     # canonical undirected form (max side = star center)
     edges = (
-        p.select(
-            F.greatest("x", "y").alias("x"), F.least("x", "y").alias("y")
-        )
+        p.filter(F.col("x") != F.col("y"))
+        .select(F.greatest("x", "y").alias("x"), F.least("x", "y").alias("y"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -1221,6 +1204,105 @@ def _max_out_degree(e: DataFrame) -> int:
     return int(row[0]["m"] or 0)
 
 
+def _closed_walks(
+    edges: DataFrame,
+    max_len: int,
+    src: str,
+    dst: str,
+    functional: bool | None,
+    *,
+    with_path: bool,
+) -> DataFrame:
+    """The level loop shared by :func:`cycle_members` and
+    :func:`cycle_paths`: (origin, cycle_len[, path]) for every level at
+    which an origin's frontier returns to it. The two differ only in how
+    a level is extended (``with_path`` appends ``>node`` to a path
+    string) and collapsed per (origin, node): ``distinct()`` versus
+    ``min(path)``. Both collapses are skipped on a functional graph."""
+    max_len = _clamp_depth(max_len)
+    # Checkpoint the (possibly expensively derived) edge frame ONCE —
+    # every level joins it, and without the cut a window-derived edge
+    # set re-runs its lineage per level. r9 (guide §2.4): the frame is
+    # pre-partitioned on the join key `_s`, which localCheckpoint
+    # preserves, so none of the max_len per-level joins re-exchanges
+    # the edge list — at 100 TB that removes max_len-1 full edge-list
+    # shuffles. All per-level checkpoints are LAZY (eager=False): the
+    # lineage cut and single materialization are identical, but the
+    # work folds into the consuming job instead of one blocking driver
+    # job per frame — measured 8.2 -> 6.4 s at sf0.1 on the ring
+    # fixture (~3 blocking jobs per level eliminated); results
+    # bit-identical.
+    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e = (
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+        .repartition(P, "_s")
+        .localCheckpoint(eager=False)
+    )
+    if functional is None:
+        functional = _max_out_degree(e) <= 1
+
+    def collapse(f: DataFrame) -> DataFrame:
+        if functional:
+            return f
+        if with_path:
+            return f.groupBy("origin", "node").agg(F.min("path").alias("path"))
+        return f.distinct()
+
+    # the path string: level 1 starts "origin>node", later levels
+    # append ">node"
+    first = extend = paths = []
+    if with_path:
+        d = F.col("_d").cast("string")
+        first = [F.concat_ws(">", F.col("_s").cast("string"), d).alias("path")]
+        extend = [F.concat(F.col("path"), F.lit(">"), d).alias("path")]
+        paths = ["path"]
+    # level 1: every edge is a 1-walk; a self-loop closes immediately
+    frontier = e.select(F.col("_s").alias("origin"), F.col("_d").alias("node"), *first)
+    visited = None
+    out = []
+    for lvl in range(1, max_len + 1):
+        if lvl > 1:
+            frontier = frontier.join(e, frontier["node"] == e["_s"]).select(
+                "origin", F.col("_d").alias("node"), *extend
+            )
+        # checkpoint the collapsed level BEFORE the closed/continue
+        # split: `closed` feeds the final union, and without the cut its
+        # lineage re-runs this level's join + collapse a second time when
+        # the result is consumed (the r9 plan showed one join+aggregate
+        # pair per level under the final Union — guide §2.4, duplicated
+        # subtrees are hidden re-shuffles)
+        frontier = collapse(frontier).localCheckpoint(eager=False)
+        closed = frontier.filter(F.col("node") == F.col("origin")).select(
+            "origin", F.lit(lvl).alias("cycle_len"), *paths
+        )
+        out.append(closed)
+        if lvl == max_len:
+            break
+        # drop origins that just closed (their min is recorded — a
+        # self-loop origin's other out-edges must not keep it expanding)
+        # and pairs already expanded at an earlier (shorter) level; on
+        # the functional path there is exactly one walk per origin, so
+        # the visited anti-join cannot shrink the frontier and is skipped
+        # along with the visited accumulation
+        frontier = frontier.filter(F.col("node") != F.col("origin")).join(
+            closed.select("origin"), "origin", "left_anti"
+        )
+        if visited is None:
+            visited = frontier.select("origin", "node")
+            continue
+        if not functional:
+            frontier = frontier.join(visited, ["origin", "node"], "left_anti")
+        frontier = frontier.localCheckpoint(eager=False)
+        if not functional:
+            visited = visited.unionByName(
+                frontier.select("origin", "node")
+            ).localCheckpoint(eager=False)
+    # an origin closes at most once per level and never after its
+    # close-out — but the last level skips the anti-join, so callers
+    # collapse defensively to the min
+    return _union_all(out)
+
+
 def cycle_members(
     edges: DataFrame,
     *,
@@ -1266,87 +1348,9 @@ def cycle_members(
     the pruning-losslessness argument above, which covers removing the
     pruning as well as applying it).
     """
-    max_len = _clamp_depth(max_len)
-    # Checkpoint the (possibly expensively derived) edge frame ONCE —
-    # every level joins it, and without the cut a window-derived edge
-    # set re-runs its lineage per level. r9 (guide §2.4): the frame is
-    # pre-partitioned on the join key `_s`, which localCheckpoint
-    # preserves, so none of the max_len per-level joins re-exchanges
-    # the edge list — at 100 TB that removes max_len-1 full edge-list
-    # shuffles. All per-level checkpoints are LAZY (eager=False): the
-    # lineage cut and single materialization are identical, but the
-    # work folds into the consuming job instead of one blocking driver
-    # job per frame — measured 8.2 -> 6.4 s at sf0.1 on the ring
-    # fixture (~3 blocking jobs per level eliminated); results
-    # bit-identical.
-    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .repartition(P, "_s")
-        .localCheckpoint(eager=False)
-    )
-    if functional is None:
-        functional = _max_out_degree(e) <= 1
-    # level 1: every edge is a 1-walk; a self-loop closes immediately
-    # (checkpointed like every later level: `found` feeds the final
-    # union and must not replay the distinct at consumption). With
-    # out-degree 1 the edge rows are already unique per origin, so the
-    # distinct exchange is skipped.
-    frontier = e.select(F.col("_s").alias("origin"), F.col("_d").alias("node"))
-    if not functional:
-        frontier = frontier.distinct()
-    frontier = frontier.localCheckpoint(eager=False)
-    found = frontier.filter(F.col("node") == F.col("origin")).select(
-        "origin", F.lit(1).alias("cycle_len")
-    )
-    # same close-out discipline as every later level: a self-loop
-    # origin's min is recorded — its other out-edges must not keep it
-    # expanding for max_len more rounds
-    frontier = frontier.filter(F.col("node") != F.col("origin")).join(
-        found.select("origin"), "origin", "left_anti"
-    )
-    visited = frontier
-    out = [found]
-    for lvl in range(2, max_len + 1):
-        # checkpoint the expanded frontier BEFORE splitting it into
-        # closed/continue: `closed` feeds the final union, and without
-        # the cut its lineage re-runs this level's join+distinct a
-        # second time when the result is consumed (the r9 plan showed
-        # one join+aggregate pair per level under the final Union —
-        # guide §2.4, duplicated subtrees are hidden re-shuffles)
-        frontier = frontier.join(e, frontier["node"] == e["_s"]).select(
-            "origin", F.col("_d").alias("node")
-        )
-        if not functional:
-            frontier = frontier.distinct()
-        frontier = frontier.localCheckpoint(eager=False)
-        closed = frontier.filter(F.col("node") == F.col("origin")).select(
-            "origin", F.lit(lvl).alias("cycle_len")
-        )
-        out.append(closed)
-        if lvl == max_len:
-            break
-        # drop origins that just closed (their min is recorded) and
-        # pairs already expanded at an earlier (shorter) level; on the
-        # functional path there is exactly one walk per origin, so the
-        # visited anti-join cannot shrink the frontier bound and is
-        # skipped along with the visited accumulation
-        frontier = frontier.filter(F.col("node") != F.col("origin")).join(
-            closed.select("origin"), "origin", "left_anti"
-        )
-        if not functional:
-            frontier = frontier.join(visited, ["origin", "node"], "left_anti")
-        frontier = frontier.localCheckpoint(eager=False)
-        if not functional:
-            visited = visited.unionByName(frontier).localCheckpoint(eager=False)
-    res = out[0]
-    for part in out[1:]:
-        res = res.unionByName(part)
-    # an origin can appear once per level only via distinct frontiers,
-    # and never after it closes — but the last level skips the
-    # anti-join, so collapse defensively to the min
     return (
-        res.groupBy(F.col("origin").alias("node"))
+        _closed_walks(edges, max_len, src, dst, functional, with_path=False)
+        .groupBy(F.col("origin").alias("node"))
         .agg(F.min("cycle_len").alias("cycle_len"))
     )
 
@@ -1392,90 +1396,10 @@ def cycle_paths(
     so both are skipped — one exchange + one anti-join + one
     union-checkpoint saved per level, rows identical.
     """
-    max_len = _clamp_depth(max_len)
-    # same r9 layout as cycle_members: edge frame pre-partitioned on the
-    # join key and checkpointed once (no per-level edge re-exchange),
-    # all per-level checkpoints lazy (same single materialization, no
-    # per-frame blocking job — guide §2.4)
-    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .repartition(P, "_s")
-        .localCheckpoint(eager=False)
-    )
-    if functional is None:
-        functional = _max_out_degree(e) <= 1
-    frontier = e.select(
-        F.col("_s").alias("origin"),
-        F.col("_d").alias("node"),
-        F.concat_ws(
-            ">", F.col("_s").cast("string"), F.col("_d").cast("string")
-        ).alias("path"),
-    )
-    if not functional:
-        frontier = frontier.groupBy("origin", "node").agg(
-            F.min("path").alias("path")
-        )
-    # checkpointed like every later level: `found` feeds the final
-    # union and must not replay the aggregate at consumption
-    frontier = frontier.localCheckpoint(eager=False)
-    found = frontier.filter(F.col("node") == F.col("origin")).select(
-        "origin", F.lit(1).alias("cycle_len"), "path"
-    )
-    # close level-1 origins out of the frontier like every later level
-    # does — a self-loop node with other out-edges must not keep
-    # expanding (its min is already recorded)
-    frontier = frontier.filter(F.col("node") != F.col("origin")).join(
-        found.select("origin"), "origin", "left_anti"
-    )
-    visited = frontier.select("origin", "node")
-    out = [found]
-    for lvl in range(2, max_len + 1):
-        # checkpoint the aggregated frontier BEFORE the closed/continue
-        # split (same fix as cycle_members): `closed` feeds the final
-        # union, and un-cut its lineage replays this level's join +
-        # min(path) SortAggregate a second time at consumption — the r9
-        # baseline plan showed one join+SortAggregate pair per level
-        # under the final Union (guide §2.4)
-        frontier = frontier.join(e, frontier["node"] == e["_s"]).select(
-            "origin",
-            F.col("_d").alias("node"),
-            F.concat(
-                F.col("path"), F.lit(">"), F.col("_d").cast("string")
-            ).alias("path"),
-        )
-        if not functional:
-            frontier = frontier.groupBy("origin", "node").agg(
-                F.min("path").alias("path")
-            )
-        frontier = frontier.localCheckpoint(eager=False)
-        closed = frontier.filter(F.col("node") == F.col("origin")).select(
-            "origin", F.lit(lvl).alias("cycle_len"), "path"
-        )
-        out.append(closed)
-        if lvl == max_len:
-            break
-        # same close-out as cycle_members; on the functional path the
-        # visited anti-join and accumulation are skipped (one walk per
-        # origin — nothing to prune)
-        frontier = frontier.filter(F.col("node") != F.col("origin")).join(
-            closed.select("origin"), "origin", "left_anti"
-        )
-        if not functional:
-            frontier = frontier.join(visited, ["origin", "node"], "left_anti")
-        frontier = frontier.localCheckpoint(eager=False)
-        if not functional:
-            visited = visited.unionByName(
-                frontier.select("origin", "node")
-            ).localCheckpoint(eager=False)
-    res = out[0]
-    for part in out[1:]:
-        res = res.unionByName(part)
-    # defensive collapse mirroring cycle_members: min (cycle_len, path)
-    # struct per origin — levels after a close are anti-joined out, but
-    # the last level skips that filter
-    agg = res.groupBy(F.col("origin").alias("node")).agg(
-        F.min(F.struct(F.col("cycle_len"), F.col("path"))).alias("m")
+    agg = (
+        _closed_walks(edges, max_len, src, dst, functional, with_path=True)
+        .groupBy(F.col("origin").alias("node"))
+        .agg(F.min(F.struct(F.col("cycle_len"), F.col("path"))).alias("m"))
     )
     return agg.select(
         "node",
@@ -1608,10 +1532,7 @@ def hierarchy_closure(
         parts.append(nxt)
         level = nxt
         closure = closure.unionByName(nxt.select("node", "ancestor"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union_all(parts)
 
 
 def package_summary(entities: DataFrame) -> DataFrame:
@@ -1723,8 +1644,7 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    small = nodes.count() <= BROADCAST_NODE_LIMIT
-    bcast = F.broadcast if small else (lambda df: df)
+    bcast = _hint(_fits_broadcast(nodes.count()))
 
     def _densify(e: DataFrame) -> DataFrame:
         """Square the edge relation up to ``edge_doublings`` times:
@@ -1844,10 +1764,82 @@ def strongly_connected_components(
         return nodes.select(
             "node", F.col("node").alias("scc_id")
         ).filter(F.lit(False))
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union_all(out_parts)
+
+
+def _seed_sample(edges: DataFrame, seed_mod: int, max_seeds: int, *cols):
+    """Prologue shared by :func:`closeness_centrality` and
+    :func:`betweenness_centrality`, over an undirected a<b edge list.
+
+    Returns ``(e, lv0, bcast, key, decode)``:
+    - ``e``: the cached undirected ``(src, dst)`` view (callers unpersist);
+    - ``lv0``: the seed sample — the first ``max_seeds`` ids of the
+      ``node % seed_mod == 0`` slice — as ``(slot, *cols)``, checkpointed,
+      with slot = the seed's rank in the sample, a dense 0..n_seeds-1
+      int that replaces the seed id as the per-source BFS label;
+    - ``bcast``: the broadcast-vs-shuffle hint, sized on |seeds|·|V|,
+      the bound on every per-(seed, node) frame;
+    - ``key(node)``: the key column ``k`` of the (``slot``, ``node``)
+      pair in the frame it is selected from;
+    - ``decode``: the columns ``slot`` and ``node`` re-derived from ``k``.
+
+    Keying (r9, guide §2.3 "narrower types"): ``k`` is ONE packed BIGINT
+    ``(node - min_node) * n_seeds + slot`` while the id span has BIGINT
+    headroom — the dominant per-level aggregate then probes an 8-byte key
+    instead of a 16-byte composite (measured 3.1x on betweenness's
+    expansion aggregate at sf0.1, 5.77 s -> 1.85 s). When ids span too
+    wide (e.g. xxhash64-derived), ``k`` is the composite
+    ``struct(slot, node)``; the distinct / aggregate / join semantics are
+    key-representation-free, so the output is identical either way and
+    the key lives only inside ``key`` and ``decode``.
+    """
+    e = _undirected(edges).cache()
+    # ONE distinct-nodes frame serves both the seed slice and the span
+    # stats (guide §1.2 — don't run the same pass twice)
+    nodes = e.select(F.col("src").alias("node")).distinct().cache()
+    seeds = (
+        nodes.filter(F.col("node") % seed_mod == 0)
+        .orderBy("node")
+        .limit(max_seeds)
+    )
+    lv0 = seeds.select(
+        (F.row_number().over(Window.orderBy("node")) - 1).alias("slot"), *cols
+    ).localCheckpoint(eager=True)
+    n_seeds = lv0.count()
+    stats = nodes.agg(
+        # count("node"), not count(1): a NULL edge endpoint upstream
+        # must not inflate n_nodes (it would perturb the broadcast
+        # switch; min/max already ignore NULLs)
+        F.count("node").alias("n"),
+        F.min("node").alias("mn"),
+        F.max("node").alias("mx"),
+    ).first()
+    nodes.unpersist()
+    bcast = _hint(_fits_broadcast(n_seeds * (stats["n"] or 0)))
+    S = max(n_seeds, 1)
+    mn = int(stats["mn"]) if stats["mn"] is not None else 0
+    mx = int(stats["mx"]) if stats["mx"] is not None else 0
+    if (mx - mn + 1) <= (2**62) // S:
+        node_dt = dict(e.dtypes)["src"]
+
+        def key(node: str):
+            # injective (node, slot) -> BIGINT while the span check holds
+            return ((F.col(node).cast("long") - F.lit(mn)) * S + F.col("slot")).alias("k")
+
+        # true integer division (k is non-negative; a double `/` would
+        # lose precision past 2^53), node cast back to its source dtype
+        # so the schema never changes
+        decode = [
+            F.pmod(F.col("k"), F.lit(S)).cast("int").alias("slot"),
+            (F.expr(f"k div {S}") + mn).cast(node_dt).alias("node"),
+        ]
+    else:
+
+        def key(node: str):
+            return F.struct("slot", F.col(node).alias("node")).alias("k")
+
+        decode = [F.col("k.slot").alias("slot"), F.col("k.node").alias("node")]
+    return e, lv0, bcast, key, decode
 
 
 def closeness_centrality(
@@ -1895,103 +1887,33 @@ def closeness_centrality(
     State is bounded by max_seeds·|V| by construction; the final
     aggregate is |seeds|-wide.
 
-    Keying (r9, same as :func:`betweenness_centrality`): every
-    per-(seed, node) distinct and anti-join runs on ONE packed BIGINT
-    key ``(node - min_node) * n_seeds + slot`` while the id span has
-    BIGINT headroom (composite-key fallback otherwise) — the dominant
-    frontier distinct probes an 8-byte key instead of a 16-byte
-    composite (guide §2.3 narrower types; measured 3.1x on the same
-    aggregate shape in betweenness). Output identical: the distinct /
-    anti-join semantics are key-representation-free.
+    Keying: every per-(seed, node) distinct and anti-join runs on the
+    single key ``k`` of :func:`_seed_sample` — a packed BIGINT while the
+    id span allows it, ``struct(slot, node)`` otherwise.
     """
-    e = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(
-            edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        .cache()
+    e, lv0, bcast, key, decode = _seed_sample(
+        edges, seed_mod, max_seeds, F.col("node").alias("seed"), "node"
     )
-    # shared distinct-nodes frame for seeds + span stats — same
-    # one-pass prologue as betweenness_centrality (r9 continuation)
-    nodes = e.select(F.col("src").alias("node")).distinct().cache()
-    seeds = (
-        nodes.filter(F.col("node") % seed_mod == 0)
-        .orderBy("node")
-        .limit(max_seeds)
-    )
-    lv0 = seeds.select(
-        (F.row_number().over(Window.orderBy("node")) - 1).alias("slot"),
-        F.col("node").alias("seed"),
-        "node",
-    ).localCheckpoint(eager=True)
-    n_seeds = lv0.count()
-    stats = nodes.agg(
-        # count("node"), not count(1): a NULL edge endpoint upstream
-        # must not inflate n_nodes (it would perturb the
-        # BROADCAST_NODE_LIMIT switch; min/max already ignore NULLs)
-        F.count("node").alias("n"),
-        F.min("node").alias("mn"),
-        F.max("node").alias("mx"),
-    ).first()
-    nodes.unpersist()
-    n_nodes = stats["n"] or 0
-    small = n_seeds * n_nodes <= BROADCAST_NODE_LIMIT
-    bcast = F.broadcast if small else (lambda df: df)
-    S = max(n_seeds, 1)
-    mn = int(stats["mn"]) if stats["mn"] is not None else 0
-    mx = int(stats["mx"]) if stats["mx"] is not None else 0
-    packed = (mx - mn + 1) <= (2**62) // S
-    node_dt = dict(e.dtypes)["src"]
-
-    def key(node_col, slot_col):
-        return (
-            (node_col.cast("long") - F.lit(mn)) * S + slot_col
-        ).alias("k")
-
-    def decode_node(kcol):
-        return (F.expr(f"k div {S}") + mn).cast(node_dt).alias("node")
-
-    if packed:
-        frontier = lv0.select(
-            key(F.col("node"), F.col("slot")).alias("k"), "slot", "node"
-        ).localCheckpoint(eager=True)
-    else:
-        frontier = lv0.select("slot", "node").localCheckpoint(eager=True)
-    keycols = ["k"] if packed else ["slot", "node"]
+    frontier = lv0.select(key("node"), "slot", "node").localCheckpoint(eager=True)
     visited = [frontier.withColumn("dist", F.lit(0))]
+    seen = frontier.select("k")
     try:
         for d in range(1, max_depth + 1):
-            seen = visited[0].select(*keycols)
-            for v in visited[1:]:
-                seen = seen.unionByName(v.select(*keycols))
-            expanded = e.join(bcast(frontier), frontier["node"] == e["src"])
-            if packed:
-                frontier = (
-                    expanded.select(key(F.col("dst"), F.col("slot")))
-                    .distinct()
-                    .join(bcast(seen), "k", "left_anti")
-                    .select(
-                        "k",
-                        F.pmod(F.col("k"), F.lit(S)).cast("int").alias("slot"),
-                        decode_node(F.col("k")),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-            else:
-                frontier = (
-                    expanded.select("slot", F.col("dst").alias("node"))
-                    .distinct()
-                    .join(bcast(seen), ["slot", "node"], "left_anti")
-                    .localCheckpoint(eager=True)
-                )
+            frontier = (
+                e.join(bcast(frontier), frontier["node"] == e["src"])
+                .select(key("dst"))
+                .distinct()
+                .join(bcast(seen), "k", "left_anti")
+                .select("k", *decode)
+                .localCheckpoint(eager=True)
+            )
             if frontier.isEmpty():
                 break
             visited.append(frontier.withColumn("dist", F.lit(d)))
+            seen = seen.unionByName(frontier.select("k"))
     finally:
         e.unpersist()
-    vis = visited[0].select("slot", "dist")
-    for v in visited[1:]:
-        vis = vis.unionByName(v.select("slot", "dist"))
+    vis = _union_all([v.select("slot", "dist") for v in visited])
     slot_counts = vis.filter(F.col("dist") >= 1).groupBy("slot").agg(
         F.count(F.lit(1)).alias("n_reached"),
         F.sum("dist").alias("sum_dist"),
@@ -2067,113 +1989,43 @@ def betweenness_centrality(
     pair contributes from both endpoints when both are seeds); n_seeds
     records how many seed BFS trees saw the node.
 
-    Keying (r9 optimization, guide §2.3 "narrower types"): every
-    per-(seed, node) aggregate and join runs on ONE packed BIGINT key
-    ``(node - min_node) * n_seeds + slot`` instead of a two-column
-    (seed, node) key — measured 3.1x faster on the dominant expansion
-    aggregate at sf0.1 (5.77 s -> 1.85 s: the partial hash aggregate
-    over the |frontier|·degree fan-out probes an 8-byte key instead of
-    a 16-byte composite). The packing is injective while
-    (max_node - min_node) * n_seeds has BIGINT headroom; when ids span
-    too wide (e.g. xxhash64-derived), the same plan falls back to the
-    composite key — identical output either way, since sigma/delta
-    sums are order-free integers.
+    Keying: every per-(seed, node) aggregate and join, forward and
+    backward, runs on the single key ``k`` of :func:`_seed_sample` — a
+    packed BIGINT while the id span allows it (measured 3.1x on the
+    dominant expansion aggregate), ``struct(slot, node)`` otherwise;
+    identical output either way, since sigma/delta sums are order-free
+    integers.
     """
-    e = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(
-            edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        .cache()
+    e, lv0, bcast, key, decode = _seed_sample(
+        edges, seed_mod, max_seeds, "node", F.lit(1).cast("long").alias("sigma")
     )
-    # ONE distinct-nodes frame serves both the seed slice and the
-    # span stats (r9 continuation, guide §1.2 — don't run the same
-    # pass twice): previously seeds ran their own distinct over the
-    # filtered edge frame AND stats ran a countDistinct (a second
-    # full-|e| aggregation); now stats is a plain count/min/max over
-    # the cached 1-column node frame. Semantically identical.
-    nodes = e.select(F.col("src").alias("node")).distinct().cache()
-    seeds = (
-        nodes.filter(F.col("node") % seed_mod == 0)
-        .orderBy("node")
-        .limit(max_seeds)
+    levels = [lv0.withColumn("k", key("node"))]
+    seen = levels[0].select("k")
+    # Brandes's dependency term of one (u -> v) tree edge, rational until
+    # the per-term e6 quantization below
+    term = (
+        F.col("sigma").cast("double")
+        / F.col("vsigma").cast("double")
+        * (F.lit(1.0) + F.col("vdelta6").cast("double") / 1000000.0)
     )
-    # slot = rank of the seed in the (deterministic) sample: a dense
-    # 0..n_seeds-1 int that replaces the seed id as the per-source BFS
-    # label — the output never needs the seed id itself
-    lv0 = seeds.select(
-        (F.row_number().over(Window.orderBy("node")) - 1).alias("slot"),
-        "node",
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
-    n_seeds = lv0.count()
-    stats = nodes.agg(
-        # count("node"), not count(1): a NULL edge endpoint upstream
-        # must not inflate n_nodes (it would perturb the
-        # BROADCAST_NODE_LIMIT switch; min/max already ignore NULLs)
-        F.count("node").alias("n"),
-        F.min("node").alias("mn"),
-        F.max("node").alias("mx"),
-    ).first()
-    nodes.unpersist()
-    n_nodes = stats["n"] or 0
-    small = n_seeds * n_nodes <= BROADCAST_NODE_LIMIT
-    bcast = F.broadcast if small else (lambda df: df)
-    S = max(n_seeds, 1)
-    mn = int(stats["mn"]) if stats["mn"] is not None else 0
-    mx = int(stats["mx"]) if stats["mx"] is not None else 0
-    packed = (mx - mn + 1) <= (2**62) // S
-    node_dt = dict(e.dtypes)["src"]
-
-    def key(node_col, slot_col):
-        # injective (node, slot) -> BIGINT while the span check holds
-        return (
-            (node_col.cast("long") - F.lit(mn)) * S + slot_col
-        ).alias("k")
-
-    def decode(kcol):
-        # invert `key`: (slot, node) back from the packed BIGINT; true
-        # integer division (k is non-negative; a double `/` would lose
-        # precision past 2^53), node cast back to its source dtype so
-        # the schema never changes
-        return [
-            F.pmod(kcol, F.lit(S)).cast("int").alias("slot"),
-            (F.expr(f"k div {S}") + mn).cast(node_dt).alias("node"),
-        ]
-
-    def with_key(df):
-        return df.withColumn("k", key(F.col("node"), F.col("slot")))
-
-    keycols = ["k"] if packed else ["slot", "node"]
-    levels = [with_key(lv0) if packed else lv0]
     try:
         for d in range(1, max_depth + 1):
-            seen = levels[0].select(*keycols)
-            for v in levels[1:]:
-                seen = seen.unionByName(v.select(*keycols))
             prev = levels[-1]
-            expanded = e.join(bcast(prev), prev["node"] == e["src"])
-            if packed:
-                # aggregate + anti-join on the single packed key; slot
-                # and node are re-derived from it after the cut
-                nxt = (
-                    expanded.select(key(F.col("dst"), F.col("slot")), "sigma")
-                    .groupBy("k")
-                    .agg(F.sum("sigma").alias("sigma"))
-                    .join(bcast(seen), "k", "left_anti")
-                    .select("k", *decode(F.col("k")), "sigma")
-                    .localCheckpoint(eager=True)
-                )
-            else:
-                nxt = (
-                    expanded.groupBy("slot", F.col("dst").alias("node"))
-                    .agg(F.sum("sigma").alias("sigma"))
-                    .join(bcast(seen), ["slot", "node"], "left_anti")
-                    .localCheckpoint(eager=True)
-                )
+            # aggregate + anti-join on the single key; slot and node are
+            # re-derived from it after the cut
+            nxt = (
+                e.join(bcast(prev), prev["node"] == e["src"])
+                .select(key("dst"), "sigma")
+                .groupBy("k")
+                .agg(F.sum("sigma").alias("sigma"))
+                .join(bcast(seen), "k", "left_anti")
+                .select("k", *decode, "sigma")
+                .localCheckpoint(eager=True)
+            )
             if nxt.isEmpty():
                 break
             levels.append(nxt)
+            seen = seen.unionByName(nxt.select("k"))
         reached = len(levels) - 1  # deepest populated level
         # backward accumulation: delta6[d] over levels reached..1, each
         # an exact BIGINT e6 partial-dependency sum; the CACHED edge
@@ -2183,97 +2035,46 @@ def betweenness_centrality(
                 "delta6", F.lit(0).cast("long")
             )
         }
-        e2 = e
         for d in range(reached - 1, 0, -1):
             u = levels[d]
-            term = (
-                F.col("sigma").cast("double")
-                / F.col("vsigma").cast("double")
-                * (F.lit(1.0) + F.col("vdelta6").cast("double") / 1000000.0)
+            # v is keyed by its own k, the probe side derives
+            # key(dst, slot) on the fly. u rides the SAME
+            # broadcast-vs-shuffle switch as the forward expansion: a
+            # shuffle join of u against the cached edge frame was the
+            # single hottest phase (11.9 s of 25.5 s at sf0.1; guide
+            # §3.1, broadcast replaces both exchanges)
+            v = deltas[d + 1].select(
+                "k",
+                F.col("sigma").alias("vsigma"),
+                F.col("delta6").alias("vdelta6"),
             )
-            if packed:
-                # the successor join and both (seed, node) keyed steps
-                # run on the packed key: v is keyed by its own k, the
-                # probe side derives key(dst, slot) on the fly.
-                # u rides the SAME broadcast-vs-shuffle switch as the
-                # forward expansion (r9: the backward pass shuffle-joined
-                # u against the cached edge frame while the forward pass
-                # broadcast the frontier — the u exchange + sort-merge
-                # over the |frontier|·degree fan-out was the single
-                # hottest phase, 11.9 s of the 25.5 s total at sf0.1;
-                # guide §3.1, broadcast replaces both exchanges)
-                v = deltas[d + 1].select(
+            contrib = (
+                bcast(u).join(e, u["node"] == e["src"])
+                .select(key("dst"), u["k"].alias("uk"), "sigma")
+                .join(bcast(v), "k")
+                .select(
+                    F.col("uk").alias("k"),
+                    F.round(term * 1000000.0).cast("long").alias("term6"),
+                )
+                .groupBy("k")
+                .agg(F.sum("term6").alias("delta6"))
+            )
+            deltas[d] = (
+                u.join(bcast(contrib), "k", "left")
+                .select(
                     "k",
-                    F.col("sigma").alias("vsigma"),
-                    F.col("delta6").alias("vdelta6"),
-                )
-                contrib = (
-                    bcast(u).join(e2, u["node"] == e2["src"])
-                    .select(
-                        key(F.col("dst"), F.col("slot")),
-                        u["k"].alias("uk"),
-                        "sigma",
-                    )
-                    .join(bcast(v), "k")
-                    .select(
-                        F.col("uk").alias("k"),
-                        F.round(term * 1000000.0).cast("long").alias("term6"),
-                    )
-                    .groupBy("k")
-                    .agg(F.sum("term6").alias("delta6"))
-                )
-                deltas[d] = (
-                    u.join(bcast(contrib), "k", "left")
-                    .select(
-                        "k",
-                        "slot",
-                        "node",
-                        "sigma",
-                        F.coalesce("delta6", F.lit(0))
-                        .cast("long")
-                        .alias("delta6"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-            else:
-                v = deltas[d + 1].select(
                     "slot",
-                    F.col("node").alias("vnode"),
-                    F.col("sigma").alias("vsigma"),
-                    F.col("delta6").alias("vdelta6"),
+                    "node",
+                    "sigma",
+                    F.coalesce("delta6", F.lit(0))
+                    .cast("long")
+                    .alias("delta6"),
                 )
-                contrib = (
-                    bcast(u).join(e2, u["node"] == e2["src"])
-                    .join(
-                        bcast(v),
-                        (F.col("dst") == F.col("vnode"))
-                        & (u["slot"] == v["slot"]),
-                    )
-                    .select(
-                        u["slot"].alias("slot"),
-                        u["node"].alias("node"),
-                        F.round(term * 1000000.0).cast("long").alias("term6"),
-                    )
-                    .groupBy("slot", "node")
-                    .agg(F.sum("term6").alias("delta6"))
-                )
-                deltas[d] = (
-                    u.join(bcast(contrib), ["slot", "node"], "left")
-                    .select(
-                        "slot",
-                        "node",
-                        "sigma",
-                        F.coalesce("delta6", F.lit(0))
-                        .cast("long")
-                        .alias("delta6"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
+                .localCheckpoint(eager=True)
+            )
     finally:
         e.unpersist()
-    out = deltas[reached].select("node", "delta6")
-    for d in range(reached - 1, 0, -1):
-        out = out.unionByName(deltas[d].select("node", "delta6"))
+    out = _union_all([df.select("node", "delta6") for df in deltas.values()])
     return (
         out.groupBy("node")
         .agg(

@@ -7,7 +7,8 @@ Each op's per-iteration node frame (ranks / keep set / labels) can be
 once where a single key exists (pagerank/LPA src; kcore's two endpoint
 keys cannot share one partitioning). BROADCAST_NODE_LIMIT picks A
 below ~50M nodes; this measures both paths on the same sf1 graph so
-the switch point is grounded in data, not folklore.
+the switch point is grounded in data, not folklore. Path B is forced by
+patching the module constant to 0 for the shuffle runs.
 
 Run: python scripts/ab_graph_broadcast.py [sf1_dir] [n_runs] [op...]
 (builds spark-warehouse/sf1 via make_sf1.py if absent; ops default to
@@ -38,10 +39,11 @@ def timed(fn, n_runs: int) -> float:
     return round(best, 2)
 
 
-class no_auto_broadcast:
-    """Scope auto-broadcast OFF for the shuffle-path runs: the node
-    frames here are small enough that AQE would silently convert the
-    hint-less join back to broadcast, and the A/B would measure the
+class shuffle_arm:
+    """Scope the shuffle-join arm: BROADCAST_NODE_LIMIT patched to 0 so
+    every operator takes its fallback, and auto-broadcast OFF — the
+    node frames here are small enough that AQE would silently convert
+    the hint-less join back to broadcast, and the A/B would measure the
     same physical plan twice. In the real >50M-node regime the frame
     exceeds the threshold and AQE keeps the shuffle join on its own —
     this scoped conf reproduces that regime at sf1 size."""
@@ -55,11 +57,14 @@ class no_auto_broadcast:
         self.spark = spark
 
     def __enter__(self):
+        self.limit = graph_mod.BROADCAST_NODE_LIMIT
+        graph_mod.BROADCAST_NODE_LIMIT = 0
         self.old = {k: self.spark.conf.get(k, None) for k in self.KEYS}
         for k in self.KEYS:
             self.spark.conf.set(k, "-1")
 
     def __exit__(self, *exc):
+        graph_mod.BROADCAST_NODE_LIMIT = self.limit
         for k, v in self.old.items():
             if v is None:
                 self.spark.conf.unset(k)
@@ -91,34 +96,16 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     runs = {
-        "pagerank broadcast": lambda: sink(
-            graph_mod.pagerank(edges, iters=5, broadcast_ranks=True)
-        ),
-        "pagerank shuffle": lambda: sink(
-            graph_mod.pagerank(edges, iters=5, broadcast_ranks=False)
-        ),
-        "kcore broadcast": lambda: sink(
-            graph_mod.kcore(edges, k=3, rounds=4, broadcast_keep=True)
-        ),
-        "kcore shuffle": lambda: sink(
-            graph_mod.kcore(edges, k=3, rounds=4, broadcast_keep=False)
-        ),
-        "lpa broadcast": lambda: sink(
-            graph_mod.communities_lpa(edges, rounds=4, broadcast_labels=True)
-        ),
-        "lpa shuffle": lambda: sink(
-            graph_mod.communities_lpa(edges, rounds=4, broadcast_labels=False)
-        ),
+        "pagerank": lambda: sink(graph_mod.pagerank(edges, iters=5)),
+        "kcore": lambda: sink(graph_mod.kcore(edges, k=3, rounds=4)),
+        "lpa": lambda: sink(graph_mod.communities_lpa(edges, rounds=4)),
     }
     for name, fn in runs.items():
-        if name.split()[0] not in ops:
+        if name not in ops:
             continue
-        if name.endswith("shuffle"):
-            with no_auto_broadcast(spark):
-                t = timed(fn, n_runs)
-        else:
-            t = timed(fn, n_runs)
-        print(f"{name}: {t} s", flush=True)
+        print(f"{name} broadcast: {timed(fn, n_runs)} s", flush=True)
+        with shuffle_arm(spark):
+            print(f"{name} shuffle: {timed(fn, n_runs)} s", flush=True)
 
 
 if __name__ == "__main__":

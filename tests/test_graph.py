@@ -431,36 +431,71 @@ def test_pagerank_matches_oracle(registry, duck):
     )
 
 
-def test_iterative_ops_shuffle_fallback_identical(registry):
+def test_iterative_ops_shuffle_fallback_identical(registry, monkeypatch):
     """VERDICT r6 item 7: the >BROADCAST_NODE_LIMIT fallback (no
-    broadcast hint; stationary edges pre-partitioned on the join key)
-    must produce results identical to the broadcast plan. Plan-shape
+    broadcast hint; stationary edges pre-partitioned on the join key
+    where one key exists) must produce results identical to the
+    broadcast plan, for every operator behind the size switch. The limit
+    is patched to 0 so each operator takes its shuffle arm. Plan-shape
     evidence lives in scripts/ab_graph_broadcast.py (the per-round
     localCheckpoint truncates loop rounds out of any final explain, and
     AQE may legitimately re-broadcast a small frame at runtime — the
     switch controls the HINT, the measured A/B shows the plans really
     diverge at scale)."""
-    from project_cortex_spark.operators.graph import (
-        communities_lpa,
-        cooccurrence_edges,
-        kcore,
-        pagerank,
-    )
-
-    edges = cooccurrence_edges(
+    edges = graph.cooccurrence_edges(
         registry.table("lineitem"),
         group_col="l_orderkey",
         item_col="l_partkey",
         max_df=50,
+    ).localCheckpoint()
+    # directed view with some back edges, so SCC has non-trivial
+    # components to settle
+    directed = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
+        edges.filter((F.col("a") + F.col("b")) % 3 == 0).select(
+            F.col("b").alias("src"), F.col("a").alias("dst")
+        )
     )
-    for fn, base_kw, fall_kw in (
-        (pagerank, {"iters": 3}, {"broadcast_ranks": False}),
-        (kcore, {"k": 3, "rounds": 3}, {"broadcast_keep": False}),
-        (communities_lpa, {"rounds": 2}, {"broadcast_labels": False}),
-    ):
-        base = {tuple(r) for r in fn(edges, **base_kw).collect()}
-        fall = {tuple(r) for r in fn(edges, **base_kw, **fall_kw).collect()}
-        assert fall == base and len(base) > 0, fn.__name__
+    seeds = edges.select(F.col("a").alias("node")).filter(F.col("node") % 10 == 0)
+    runs = {
+        "pagerank": lambda: graph.pagerank(edges, iters=3),
+        "pagerank_personalized": lambda: graph.pagerank_personalized(
+            edges, seeds, iters=3
+        ),
+        "kcore": lambda: graph.kcore(edges, k=3, rounds=3),
+        "communities_lpa": lambda: graph.communities_lpa(edges, rounds=2),
+        "strongly_connected_components": lambda: (
+            graph.strongly_connected_components(directed)
+        ),
+        "closeness_centrality": lambda: graph.closeness_centrality(
+            edges, max_seeds=16
+        ),
+        "betweenness_centrality": lambda: graph.betweenness_centrality(
+            edges, max_seeds=16
+        ),
+    }
+    base = {name: {tuple(r) for r in fn().collect()} for name, fn in runs.items()}
+    monkeypatch.setattr(graph, "BROADCAST_NODE_LIMIT", 0)
+    for name, fn in runs.items():
+        fall = {tuple(r) for r in fn().collect()}
+        assert fall == base[name] and len(base[name]) > 0, name
+
+
+def test_broadcast_limit_read_in_one_function():
+    """The broadcast-vs-shuffle decision lives in one function: every
+    operator reaches BROADCAST_NODE_LIMIT through it, so patching the
+    module constant flips every operator's arm."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(graph))
+    readers = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Name) and node.id == "BROADCAST_NODE_LIMIT"
+    ]
+    assert readers == ["_fits_broadcast"]
 
 
 def test_kcore_peels_tail_iteratively(spark):
@@ -664,12 +699,25 @@ class TestConnectedComponents:
         assert df.columns == ["doc_id", "cluster_id", "keep"]
 
     def test_self_pairs_only(self, spark):
-        # self loops carry no connectivity; the node set is empty too
-        # (contract: only nodes participating in a real pair appear)
-        df = graph.connected_components(
-            spark.createDataFrame([(5, 5)], ["a", "b"])
-        )
-        assert df.count() == 0
+        # self loops carry no connectivity, but their node is still a
+        # document: it is its own singleton cluster
+        assert self._cc(spark, [(5, 5)]) == {(5, 5, True)}
+
+    def test_self_pair_node_kept_like_min_label(self, spark):
+        """A node whose only pair is a self-pair appears as its own
+        cluster, exactly as in the min-label twin duplicate_clusters."""
+        from project_cortex_spark.operators import dedup as dd
+
+        pairs = [(1, 2), (7, 7)]
+        label = {
+            (r["doc_id"], r["cluster_id"], r["keep"])
+            for r in dd.duplicate_clusters(
+                spark.createDataFrame(pairs, ["a", "b"])
+            ).collect()
+        }
+        assert self._cc(spark, pairs) == label == {
+            (1, 1, True), (2, 1, False), (7, 7, True),
+        }
 
 def test_cooccurrence_df_cap_drops_hot_items(spark):
     """The df cap must remove hot items from the edge universe while
@@ -1233,3 +1281,41 @@ def test_betweenness_matches_unrolled_oracle(registry, duck):
         )
     )
     assert_matches_oracle(df, duck, oracle.betweenness_sql(max_df=50))
+
+
+@pytest.mark.parametrize(
+    "op", [graph.closeness_centrality, graph.betweenness_centrality]
+)
+def test_centrality_composite_key_matches_packed(spark, op):
+    """Ids spanning too wide for the packed BIGINT key take the
+    struct(slot, node) arm, with identical rows. Relabeling x -> x*M
+    with M = 1 (mod seed_mod) and M ~ 2^56 keeps the seed choice and
+    id order while the span (~2^62.6) exceeds any packable width."""
+    import random
+
+    seed_mod = 5
+    m = 2**56 - (2**56 % seed_mod) + 1
+    rng = random.Random(11)
+    pairs = sorted(
+        {
+            (min(x, y), max(x, y))
+            for x, y in ((rng.randrange(100), rng.randrange(100)) for _ in range(180))
+            if x != y
+        }
+    )
+    assert max(b for _, b in pairs) * m > 2**62  # no packing for any seed count
+
+    def rows(df, scale):
+        return sorted(
+            (r["node"] // scale,) + tuple(r[c] for c in df.columns if c != "node")
+            for r in df.collect()
+        )
+
+    packed = op(spark.createDataFrame(pairs, "a long, b long"), seed_mod=seed_mod)
+    wide = op(
+        spark.createDataFrame([(x * m, y * m) for x, y in pairs], "a long, b long"),
+        seed_mod=seed_mod,
+    )
+    got, want = rows(wide, m), rows(packed, 1)
+    assert got == want and len(want) > 0
+

@@ -1000,11 +1000,10 @@ def test_incremental_components_cross_batch_merges(spark, tmp_path):
             spark.createDataFrame(all_pairs, ["a", "b"])
         ).collect()
     }
-    # the batch operator drops self-loop-only nodes; the stream map
-    # includes every node it has seen a pair row for — node 5 is the
-    # only difference and maps to itself
-    assert got - want == {(5, 5, True)}
-    assert want - got == set()
+    # both keep every node seen in a pair row: the self-loop-only node
+    # 5 is its own singleton cluster in the stream map and in one-shot CC
+    assert got == want
+    assert (5, 5, True) in got
     assert (1, 1, True) in got and (21, 1, False) in got
 
 
